@@ -40,9 +40,9 @@ object Tables {
     * re-derived as nanos via `unix_micros` under the session's pinned UTC
     * zone, so every downstream `div`/compare keeps working unchanged.
     *
-    * The conf is set at session BUILD time by every graft entry point
-    * (Verify/Bench/Show/PlanProbe/TestSpark) so plan behavior never depends
-    * on whether events() ran first. The guarded set below is only a
+    * The conf is set at session BUILD time by [[graft.GraftSession]], which
+    * every graft entry point uses, so plan behavior never depends on
+    * whether events() ran first. The guarded set below is only a
     * fallback for foreign sessions — a no-op (no conf mutation) under any
     * graft-built session. */
   def events(spark: SparkSession, dir: String): DataFrame = {

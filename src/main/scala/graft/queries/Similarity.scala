@@ -268,8 +268,7 @@ object Similarity extends QueryPack {
   }
 
   val k6: QueryDef = x("k6_minhash_lsh") { (spark, dir) =>
-    lshCandidates(spark, dir,
-      sys.env.getOrElse("SPARK_GRAFT_LSH_BUCKET_CAP", "1024").toInt)
+    lshCandidates(spark, dir, 1024)
   }
 
   /** CLUSTERING-path candidate generator: same banding as
@@ -311,7 +310,7 @@ object Similarity extends QueryPack {
     *     and the verify join (lshClusters previously filtered after the
     *     distinct; same predicate, same surviving set, applied earlier).
     *
-    * Measured at sf0.1 (Lab, one JVM, back-to-back): current shape
+    * Measured at sf0.1 (OPTIMIZATION_r21.md, one JVM): current shape
     * 10.6-11.9 s → 3.5 s for a set-identical pair output (3,392,061
     * pairs). Returns (id_a, id_b), unique EXCEPT that a star pair from an
     * over-cap band which also co-buckets at an in-cap band arrives once
@@ -328,12 +327,6 @@ object Similarity extends QueryPack {
     out
   }
 
-  /** Plan-only twin for explain dumps (Lab/PlanDump evidence): same plan,
-    * nothing materialized — the intermediate eager checkpoints still run
-    * when the plan is built, so only use this for explain, not timing. */
-  private[graft] def fbwCandidatesPlanOnly(docs: DataFrame, bucketCap: Int,
-      tau: Long): DataFrame = fbwCandidatesPlan(docs, bucketCap, tau, 24, 3)._1
-
   /** Dictionary-encode `(doc_id, ts ARRAY<STRING>)` to
     * `(doc_id, ts ARRAY<INT>)` — an EXACT bijection on the corpus
     * vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are preserved
@@ -348,8 +341,7 @@ object Similarity extends QueryPack {
     *    intersection size doesn't care);
     *  - null token SETS stay null and empty stay empty (size(null) must
     *    stay −1 downstream — HardeningSpec's null-text doc rides this).
-    * Shared by the verify join in [[lshClusters]] and the Lab evidence
-    * experiments so the measured shape IS the shipped shape. Caller owns
+    * Used by the verify join in [[lshClusters]]. Caller owns
     * checkpointing. */
   private[graft] def dictEncodePlan(repDocs: DataFrame): DataFrame = {
     val spark = repDocs.sparkSession
@@ -870,142 +862,7 @@ object Similarity extends QueryPack {
     * LSH-dedup recall budget; exactness-asserting callers (k12b) keep
     * the cap above the post-collapse bucket sizes, which the collapse
     * makes easy. */
-  /** Verify-FRUGAL clustering core: exact-Jaccard verification cost made
-    * output-sensitive instead of candidate-sensitive. OPT-IN
-    * (`lshClusters(..., frugal = true)`), NOT the default — see the
-    * measured verdict below.
-    *
-    * The loop exploits one graph fact: an edge whose endpoints are
-    * ALREADY in the same component cannot change the components. Each
-    * round (1) exact-verifies a bounded deterministic batch — per left
-    * endpoint, the pending partner first in xxhash64 order (hash order,
-    * not id order: a node's smallest-ID partners are disproportionately
-    * LSH false positives, and id-order batching measurably burned whole
-    * rounds on them; in hash order a node inside a true near-dup
-    * community hits a true partner with probability ≈ its true-pair
-    * fraction, so communities merge in the first round or two);
-    * (2) merges the verified edges into the running components (labels
-    * re-enter as star edges `vec_id→lbl`, so the merge is a plain CC
-    * over star ∪ new-edges, diameter ≈ 2); (3) PRUNES, without touching
-    * any token array, every pending pair that became intra-component. A
-    * community of m docs costs ~m verifications instead of C(m,2). Pairs
-    * that fail verification leave only by being batched, so once pending
-    * falls under `fullVerifyFloor` (or at the round cap) the remainder
-    * is verified in ONE exact pass — the result is THE components of the
-    * full verified edge set, value-identical to the non-frugal path
-    * (asserted in SimilarityOpsSpec at sf0.001).
-    *
-    * MEASURED VERDICT (round 14, sf0.1, idle box): the frugal route is
-    * NOT faster on this corpus — 664k surviving candidate pairs
-    * exact-verify in ~8 s (the token arrays are ~10²; the whole verify
-    * join is ~10 s of k12b's 36 s), while each frugal round pays ~1 s of
-    * CC/checkpoint fixed cost, and ~2/3 of candidates are LSH false
-    * positives that no amount of connectivity pruning can skip. k12b
-    * (verify-everything) therefore stays the default and the benched
-    * path. The frugal loop is kept as the documented scale lever for the
-    * regime that inverts the trade: per-pair verification cost growing
-    * with document width (real crawl docs are 10³–10⁴ tokens — 50–100×
-    * this corpus per intersect) against a near-dup mass dominated by
-    * TRUE communities, where spanning-verification's asymptotic win
-    * dwarfs the per-round overhead.
-    *
-    * Storage contract matches connectedComponents: at any instant at
-    * most the pending pair set (two longs per row), one labels set, and
-    * the in-flight batch are materialized; each round releases its
-    * predecessors. */
-  private def frugalComponents(repDocs: DataFrame, pairs: DataFrame,
-      threshold: Double, maxOuterRounds: Int = 40): DataFrame = {
-    val nodes = repDocs.select("doc_id")
-    def verifyExact(batch: DataFrame): DataFrame =
-      batch
-        .join(repDocs.toDF("id_a", "ts_a"), "id_a")
-        .join(repDocs.toDF("id_b", "ts_b"), "id_b")
-        .withColumn("__i", size(array_intersect(col("ts_a"), col("ts_b"))))
-        .where(round(col("__i").cast(DoubleType)
-          / (size(col("ts_a")) + size(col("ts_b")) - col("__i")), 6) >= threshold)
-        .select(col("id_a"), col("id_b"))
-    // STATS REBASE — load-bearing, measured this round: Spark 4's
-    // Dataset.checkpoint REWRITES the new LogicalRDD's stats from the
-    // original plan (LogicalRDD.rewriteStatsAndConstraints), and join
-    // estimation MULTIPLIES child sizeInBytes. In an iterative loop whose
-    // round N plan embeds round N−1's checkpoints several times, the
-    // rewritten sizeInBytes therefore COMPOUNDS — its digit count roughly
-    // doubles per round, and by round ~25 the checkpoint call itself sat
-    // in BigInteger ToomCook multiplication of million-digit numbers
-    // (jstack-verified hang). Re-wrapping each round's materialized
-    // blocks in a fresh RDD-backed frame resets the leaf stats to the
-    // session default, so per-round estimates stay bounded while the
-    // DATA path is untouched (the rebased frame reads the checkpoint's
-    // storage blocks). The inner CC loop doesn't need this: its digit
-    // growth is additive per round, not multiplicative.
-    def rebased(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
-    var pendingCp = Checkpoints.eager(pairs.select("id_a", "id_b"))
-    var pending = rebased(pendingCp)
-    var labelsCp = Checkpoints.eager(
-      nodes.toDF("vec_id").select(col("vec_id"), col("vec_id").as("lbl")))
-    var labels = rebased(labelsCp)
-    var rnd = 0
-    var nPending = pendingCp.count()
-    val nNodes = labelsCp.count()
-    // once pending is within a small multiple of the node count, batching
-    // buys nothing — verify the remainder in one exact pass (measured:
-    // ~10⁵ pairs/s through the exact intersect on 10²-token arrays, so
-    // this floor costs ~1 round's fixed overhead)
-    val fullVerifyFloor = math.max(50000L, 4L * nNodes)
-    ccLog(s"frugal: $nPending size-compatible candidate pairs, $nNodes nodes")
-    while (nPending > 0 && rnd < maxOuterRounds) {
-      rnd += 1
-      val rt = System.nanoTime()
-      // bounded batch: one pair per active left endpoint, partner picked
-      // by xxhash64 order (deterministic; see doc — id order is
-      // adversarial because low-id partners skew false-positive). The
-      // LAST round and the small-remainder case take everything still
-      // pending: the exactness fallback that bounds the loop.
-      val takeAll = rnd == maxOuterRounds || nPending <= fullVerifyFloor
-      val batchCp = Checkpoints.eager(
-        if (takeAll) pending
-        else pending
-          .groupBy(col("id_a"))
-          .agg(min(struct(xxhash64(col("id_a"), col("id_b"), lit(rnd)).as("h"),
-            col("id_b").as("b"))).as("m"))
-          .select(col("id_a"), col("m.b").as("id_b")))
-      val batch = rebased(batchCp)
-      val newEdges = verifyExact(batch)
-      // current components re-enter as star edges; CC over star ∪ new
-      // verified edges = components of everything verified so far
-      val star = labels.where(col("vec_id") =!= col("lbl"))
-        .select(col("vec_id").as("src"), col("lbl").as("dst"))
-      val newLabelsCp = connectedComponents(nodes, star.union(newEdges))
-      Checkpoints.release(labelsCp)
-      labelsCp = newLabelsCp
-      labels = rebased(labelsCp)
-      // prune: the processed batch leaves unconditionally; everything
-      // now intra-component leaves WITHOUT its token arrays ever being
-      // joined — pending rows are two longs throughout
-      val la = labels.select(col("vec_id").as("id_a"), col("lbl").as("__la"))
-      val lb = labels.select(col("vec_id").as("id_b"), col("lbl").as("__lb"))
-      val remaining =
-        if (takeAll) pending.limit(0) // everything was verified this round
-        else pending
-          .join(batch, Seq("id_a", "id_b"), "left_anti")
-          .join(la, "id_a").join(lb, "id_b")
-          .where(col("__la") =!= col("__lb"))
-          .select("id_a", "id_b")
-      val nextPendingCp = Checkpoints.eager(remaining)
-      Checkpoints.release(pendingCp, batchCp)
-      pendingCp = nextPendingCp
-      pending = rebased(pendingCp)
-      nPending = pendingCp.count()
-      graft.core.Attribution.record("frugal_round", (System.nanoTime() - rt) / 1e9)
-      ccLog(s"frugal round $rnd: ${secsSince(rt)}, pending=$nPending")
-    }
-    Checkpoints.release(pendingCp)
-    labelsCp
-  }
-
-  def lshClusters(docs: DataFrame, threshold: Double, bucketCap: Int,
-      frugal: Boolean = false): DataFrame = {
+  def lshClusters(docs: DataFrame, threshold: Double, bucketCap: Int): DataFrame = {
     // 0: exact-set collapse. The fingerprint md5-hashes the JSON of the
     // SORTED distinct token array — to_json (unlike a joined string)
     // keeps null / [] / [""] distinct and escapes any separator-like
@@ -1075,72 +932,67 @@ object Similarity extends QueryPack {
     // free read off the checkpoint blocks; sizes the verify join's input
     // (the quantity the τ-prefilter and banding dials actually control)
     ccLog(s"candidate pairs: ${candidates.count()}")
-    val sizeOk = candidates
-    val labels = if (frugal) {
-      frugalComponents(repDocs, sizeOk, threshold)
-    } else {
-      // DICTIONARY-ENCODED verify (round 22): tokens are dense-int-coded
-      // corpus-wide before the verify join — the vocabulary (distinct
-      // tokens, sorted) gets ids 0..V−1 via a distributed sort +
-      // zipWithIndex, each rep's token set re-collects as a sorted
-      // ARRAY<INT>, and Jaccard runs over the int arrays. EXACT by
-      // construction: the token→id map is a bijection on the corpus
-      // vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are
-      // preserved (arrays stay distinct); null token sets stay null and
-      // empty stay empty, so the threshold filter sees the same values
-      // row for row (spec-asserted: edge set byte-identical at sf0.001
-      // AND over the real sf0.1 candidate set in the Lab A/B —
-      // 698,435 edges, except() both ways = 0).
-      //
-      // Why (guide §2.3 narrower types, §5 allocation): the verify
-      // join's mid-exchange carries one token array per candidate pair —
-      // the widest shuffle in the dedup path at any scale. Int codes cut
-      // those bytes ~4x vs the UTF8 tokens, and the per-pair merge walk
-      // compares primitives instead of UTF8String byte spans. At sf0.1
-      // the best-case times tie (Lab, 8 reps: strings best 1.70 s, dict
-      // verify best 1.30 + 0.5 encode), but the HIGH modes separate
-      // decisively: strings spiked to 5.2 s and 10.2 s inside one JVM
-      // while the int verify never left 1.3–1.9 s — the stage's
-      // documented GC-bimodality (round 16: 8 s ↔ 42 s) is proportional
-      // to allocated bytes, which the encoding shrinks 4x. The encode
-      // itself is two small shuffles of the token explosion (~0.5 s
-      // warm), amortized against the corpus-sized verify at 100 TB.
-      val tEnc = System.nanoTime()
-      val encDocs = Checkpoints.eager(dictEncodePlan(repDocs))
-      ccStage("verify_encode", tEnc)
-      // SHUFFLE-HASH, not sort-merge: SMJ must SORT the pair stream —
-      // 5.5M rows at sf0.1, and after the first join each row carries a
-      // token ARRAY, so the second sort runs over wide rows and spills;
-      // measured round 15, this was the bimodal stage (18 s vs 150-180 s
-      // back-to-back on identical data — the spill path is hostage to
-      // disk/alloc weather). A hash join builds on the rep side — per
-      // partition a bounded slice of the (collapsed) rep table — and
-      // STREAMS the pair side with no sort and no wide-row spill. Still
-      // fully distributed (both sides shuffle on the key): at 100 TB
-      // reps is corpus-sized, so broadcast is not an option, but the
-      // per-partition build slice stays bounded exactly like any
-      // shuffled hash join. Never falls back to SMJ on build overflow
-      // (Spark 3.1+ honors the hint); spill of the BUILD side would
-      // mean rep skew, which the banding bucketCap already bounds.
-      // |A∩B| via the zero-allocation two-pointer expression, NOT
-      // size(array_intersect(..)): the arrays are sorted+distinct by
-      // construction, and ArrayIntersect's per-row hash set + result
-      // array made this stage GC-BIMODAL (round 16: verify_force 8 s ↔
-      // 42 s on identical data, flat probes, tmpfs shuffle unchanged —
-      // allocator weather, not IO). The merge walk allocates nothing.
-      val verified = sizeOk
-        .join(encDocs.toDF("id_a", "ts_a").hint("shuffle_hash"), "id_a")
-        .join(encDocs.toDF("id_b", "ts_b").hint("shuffle_hash"), "id_b")
-        .withColumn("__i", expr("graft_sorted_intersect_size(ts_a, ts_b)"))
-        .where(round(col("__i").cast(DoubleType)
-          / (size(col("ts_a")) + size(col("ts_b")) - col("__i")), 6) >= threshold)
-        .select(col("id_a"), col("id_b"))
-      val lbls = connectedComponents(repDocs.select("doc_id"), verified)
-      // CC's eager edge materialization forced the verify join — the
-      // encoded side is dead now
-      Checkpoints.release(encDocs)
-      lbls
-    }
+    // DICTIONARY-ENCODED verify (round 22): tokens are dense-int-coded
+    // corpus-wide before the verify join — the vocabulary (distinct
+    // tokens, sorted) gets ids 0..V−1 via a distributed sort +
+    // zipWithIndex, each rep's token set re-collects as a sorted
+    // ARRAY<INT>, and Jaccard runs over the int arrays. EXACT by
+    // construction: the token→id map is a bijection on the corpus
+    // vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are
+    // preserved (arrays stay distinct); null token sets stay null and
+    // empty stay empty, so the threshold filter sees the same values
+    // row for row (spec-asserted: edge set byte-identical at sf0.001
+    // AND over the real sf0.1 candidate set in the A/B recorded in
+    // OPTIMIZATION_r22.md —
+    // 698,435 edges, except() both ways = 0).
+    //
+    // Why (guide §2.3 narrower types, §5 allocation): the verify
+    // join's mid-exchange carries one token array per candidate pair —
+    // the widest shuffle in the dedup path at any scale. Int codes cut
+    // those bytes ~4x vs the UTF8 tokens, and the per-pair merge walk
+    // compares primitives instead of UTF8String byte spans. At sf0.1
+    // the best-case times tie (8 reps: strings best 1.70 s, dict
+    // verify best 1.30 + 0.5 encode), but the HIGH modes separate
+    // decisively: strings spiked to 5.2 s and 10.2 s inside one JVM
+    // while the int verify never left 1.3–1.9 s — the stage's
+    // documented GC-bimodality (round 16: 8 s ↔ 42 s) is proportional
+    // to allocated bytes, which the encoding shrinks 4x. The encode
+    // itself is two small shuffles of the token explosion (~0.5 s
+    // warm), amortized against the corpus-sized verify at 100 TB.
+    val tEnc = System.nanoTime()
+    val encDocs = Checkpoints.eager(dictEncodePlan(repDocs))
+    ccStage("verify_encode", tEnc)
+    // SHUFFLE-HASH, not sort-merge: SMJ must SORT the pair stream —
+    // 5.5M rows at sf0.1, and after the first join each row carries a
+    // token ARRAY, so the second sort runs over wide rows and spills;
+    // measured round 15, this was the bimodal stage (18 s vs 150-180 s
+    // back-to-back on identical data — the spill path is hostage to
+    // disk/alloc weather). A hash join builds on the rep side — per
+    // partition a bounded slice of the (collapsed) rep table — and
+    // STREAMS the pair side with no sort and no wide-row spill. Still
+    // fully distributed (both sides shuffle on the key): at 100 TB
+    // reps is corpus-sized, so broadcast is not an option, but the
+    // per-partition build slice stays bounded exactly like any
+    // shuffled hash join. Never falls back to SMJ on build overflow
+    // (Spark 3.1+ honors the hint); spill of the BUILD side would
+    // mean rep skew, which the banding bucketCap already bounds.
+    // |A∩B| via the zero-allocation two-pointer expression, NOT
+    // size(array_intersect(..)): the arrays are sorted+distinct by
+    // construction, and ArrayIntersect's per-row hash set + result
+    // array made this stage GC-BIMODAL (round 16: verify_force 8 s ↔
+    // 42 s on identical data, flat probes, tmpfs shuffle unchanged —
+    // allocator weather, not IO). The merge walk allocates nothing.
+    val verified = candidates
+      .join(encDocs.toDF("id_a", "ts_a").hint("shuffle_hash"), "id_a")
+      .join(encDocs.toDF("id_b", "ts_b").hint("shuffle_hash"), "id_b")
+      .withColumn("__i", expr("graft_sorted_intersect_size(ts_a, ts_b)"))
+      .where(round(col("__i").cast(DoubleType)
+        / (size(col("ts_a")) + size(col("ts_b")) - col("__i")), 6) >= threshold)
+      .select(col("id_a"), col("id_b"))
+    val labels = connectedComponents(repDocs.select("doc_id"), verified)
+    // CC's eager edge materialization forced the verify join — the
+    // encoded side is dead now
+    Checkpoints.release(encDocs)
     // connectedComponents eagerly materialized its symmetrized edge set
     // (which also forced the verify join), so the candidate-pair
     // checkpoint (lshCandidatesOf's return) is now dead

@@ -49,7 +49,7 @@ object StreamOps {
     * watermarks reject TIMESTAMP_NTZ event-time columns, so queries cast
     * their window bounds to NTZ at output instead). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    // fallback for foreign sessions only — graft sessions set this at build
+    // fallback for foreign sessions only — GraftSession sets this at build
     // time (see Tables.events); no-op there
     if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

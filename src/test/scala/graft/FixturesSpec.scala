@@ -130,4 +130,16 @@ class FixturesSpec extends SparkSpecBase {
     graft.streaming.StreamOps.eventsSchema(spark, microsDir)("ts").dataType shouldBe
       TimestampNTZType
   }
+
+  test("GraftSession.build(n) pins UTC, nanosAsLong and n shuffle partitions " +
+      "(the conf guards in Tables.events / StreamOps.eventsStream are no-ops)") {
+    spark // the shared session exists; build re-applies its SQL confs to it
+    val s = GraftSession.build(3)
+    try {
+      s.conf.get("spark.sql.session.timeZone") shouldBe "UTC"
+      s.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
+      s.conf.get("spark.sql.shuffle.partitions") shouldBe "3"
+    } finally GraftSession.build(TestSpark.cpus)
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe TestSpark.cpus.toString
+  }
 }

@@ -7,15 +7,9 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local session for all specs (one JVM-wide session — scalatest
   * suites run sequentially in the forked test JVM). */
 object TestSpark {
+  val cpus: Int = 4
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build(cpus)
     s.sparkContext.setLogLevel("WARN")
     s
   }
